@@ -131,7 +131,7 @@ object GraftSession {
       // still happen, asynchronously in maintenance). The default
       // full-snapshot mode measured ~0.5-1 s of pure commit overhead per
       // stateful micro-batch at 32 partitions even with KB-scale state
-      // (StreamFloorProbe r16), and at production state sizes snapshot-per-
+      // (OPTIMIZATION_r16.md §3), and at production state sizes snapshot-per-
       // commit is the scale killer changelog mode exists to fix. Recovery
       // semantics are unchanged (snapshot + changelog replay).
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
@@ -140,7 +140,7 @@ object GraftSession {
       // keyToNumValues/keyWithIndexToValue). The v2 default ran 4× the
       // store instances, each paying its own open + changelog-commit fsync
       // per micro-batch — measured 27 s aggregate fsync across 128
-      // instances on a 200 k-row join batch (StreamJoinProbe r16); v3 cut
+      // instances on a 200 k-row join batch (OPTIMIZATION_r16.md §8b); v3 cut
       // the row 9-12 s → 3.4 s at identical output. Applies to NEW
       // checkpoints only (every checkpoint here is per-run), semantics
       // unchanged.

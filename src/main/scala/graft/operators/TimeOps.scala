@@ -116,10 +116,8 @@ object TimeOps {
     * sides' state (the reference's TimeIntervalJoin keeps exactly this
     * +1 h/-0 window of rows per side). INNER join, so every matched pair
     * emits when found and the result equals the batch join row-for-row —
-    * the oracle is the plain pair list. */
-  /** The stream-stream interval-joined frame (before the sink) — shared
-    * with tools/StreamJoinProbe so probe measurements can never silently
-    * diverge from the declared query they claim to explain (ADVICE r16). */
+    * the oracle is the plain pair list. This is the joined frame before
+    * the sink; [[streamIntervalJoin]] drains it into the bench row. */
   private[graft] def streamIntervalJoined(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val schema = s.read.parquet(path).schema

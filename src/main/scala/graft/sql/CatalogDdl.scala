@@ -133,19 +133,19 @@ object CatalogDdl {
   private val alterDbRe =
     """(?is)^\s*ALTER\s+DATABASE\s+(\w+)\s+SET\s+(?:DBPROPERTIES\s+)?\((.*)\)\s*;?\s*$""".r
 
-  // Blanked extractors (FlinkSql.Blanked): [[matches]] tests the BLANKED
+  // Blanked extractors (SqlText.Blanked): [[matches]] tests the BLANKED
   // probe, so [[run]] must decide its branch on the same text — a literal
   // hazard (COMMENT 'it''s') that blanks clean would otherwise pass matches
   // and then miss every original-text regex, landing in the catch-all
   // (ADVICE r15). Group contents are sliced from the ORIGINAL, so property
   // values stay intact.
-  private val createB = new FlinkSql.Blanked(createRe)
-  private val dropB = new FlinkSql.Blanked(dropRe)
-  private val useB = new FlinkSql.Blanked(useRe)
-  private val useDbB = new FlinkSql.Blanked(useDbRe)
-  private val createDbB = new FlinkSql.Blanked(createDbRe)
-  private val dropDbB = new FlinkSql.Blanked(dropDbRe)
-  private val alterDbB = new FlinkSql.Blanked(alterDbRe)
+  private val createB = new SqlText.Blanked(createRe)
+  private val dropB = new SqlText.Blanked(dropRe)
+  private val useB = new SqlText.Blanked(useRe)
+  private val useDbB = new SqlText.Blanked(useDbRe)
+  private val createDbB = new SqlText.Blanked(createDbRe)
+  private val dropDbB = new SqlText.Blanked(dropDbRe)
+  private val alterDbB = new SqlText.Blanked(alterDbRe)
 
   /** The statements this front-end owns. The database-DDL and bare-USE
     * shapes are owned only while a DDL-registered catalog is current —
@@ -170,7 +170,7 @@ object CatalogDdl {
   def run(spark: SparkSession, sql: String, native: String => DataFrame): DataFrame = {
     import spark.implicits._
     val ns = currentNamespace(spark)
-    val probe = FlinkSql.blankLiteralsAndComments(sql)
+    val probe = SqlText.blank(sql)
     sql match {
       case createB(name, propsBody) =>
         val props = Option(propsBody).map(b =>

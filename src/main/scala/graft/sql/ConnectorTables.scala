@@ -244,15 +244,15 @@ object ConnectorTables {
   // Table names may be database- or catalog-qualified (db.t / cat.db.t) —
   // see resolveQualified and canonical.
   // statement shapes are located on literal/comment-BLANKED text with
-  // groups sliced from the original (FlinkSql.Blanked) — a prop VALUE
+  // groups sliced from the original (SqlText.Blanked) — a prop VALUE
   // containing ')' / 'WITH (' / 'LIKE x' can neither terminate a capture
   // early nor steal a clause (fuzz family 30 discipline)
-  private val createRe = new FlinkSql.Blanked(
+  private val createRe = new SqlText.Blanked(
     """(?is)\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?((?:\w+\.){0,2}\w+)\s*\((.*?)\)\s*(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?WITH\s*\((.*?)\)\s*""".r)
-  private val likeRe = new FlinkSql.Blanked(
+  private val likeRe = new SqlText.Blanked(
     """(?is)\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?((?:\w+\.){0,2}\w+)\s*(?:\((.*?)\)\s*)?(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?WITH\s*\((.*?)\)\s*LIKE\s+((?:\w+\.){0,2}\w+)\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*""".r)
   // INSERT INTO|OVERWRITE t [PARTITION (p='v'[, ...])] SELECT ...
-  private val insertRe = new FlinkSql.Blanked(
+  private val insertRe = new SqlText.Blanked(
     """(?is)\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?((?:\w+\.){0,2}\w+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?(SELECT\s+.*|VALUES\s*\(.*)""".r)
   private val propRe = """'([^']+)'\s*=\s*'([^']*)'""".r
   private val pkRe = """(?i)(?:CONSTRAINT\s+(\w+)\s+)?PRIMARY\s+KEY\s*\(([^)]*)\)""".r
@@ -271,7 +271,7 @@ object ConnectorTables {
     """(?is)^(\w+)\s+(.+?)\s+METADATA(?:\s+(FROM)\s+'([^']+)')?(\s+VIRTUAL)?\s*$""".r
 
   private[sql] def parseMetaCols(cols: String): Seq[MetaCol] =
-    splitTop(cols).flatMap(c => metaColRe.findFirstMatchIn(c.trim).map(m =>
+    SqlText.splitTop(cols).flatMap(c => metaColRe.findFirstMatchIn(c.trim).map(m =>
       MetaCol(m.group(1), Option(m.group(4)).getOrElse(m.group(1)),
         normType(m.group(2)), m.group(3) != null, m.group(5) != null)))
 
@@ -322,7 +322,7 @@ object ConnectorTables {
   /** The declared column list in declaration order — DESCRIBE's source of
     * truth. Constraint and WATERMARK items are not columns and drop out. */
   private[sql] def parseDecl(colsDdl: String): Seq[DeclCol] =
-    splitTop(colsDdl).flatMap { item =>
+    SqlText.splitTop(colsDdl).flatMap { item =>
       val c = item.trim
       val u = c.toUpperCase
       if (u.startsWith("PRIMARY KEY") || u.startsWith("CONSTRAINT") ||
@@ -367,7 +367,7 @@ object ConnectorTables {
   def matchesAlterOrDrop(probe: String): Boolean =
     """(?i)^\s*(ALTER|DROP)\s+TABLE\b""".r.findFirstIn(probe).isDefined
 
-  private val showPartsRe = new FlinkSql.Blanked(
+  private val showPartsRe = new SqlText.Blanked(
     """(?is)^\s*SHOW\s+PARTITIONS\s+((?:\w+\.){0,2}\w+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*$""".r)
 
   def matchesShowPartitions(probe: String): Boolean =
@@ -400,15 +400,15 @@ object ConnectorTables {
     case _ => None
   }
 
-  private val alterSetRe = new FlinkSql.Blanked(
+  private val alterSetRe = new SqlText.Blanked(
     """(?is)\s*ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+SET\s*\((.*)\)\s*""".r)
-  private val alterAddConstraintRe = new FlinkSql.Blanked(
+  private val alterAddConstraintRe = new SqlText.Blanked(
     """(?is)\s*ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+ADD\s+(?:CONSTRAINT\s+(\w+)\s+)?(PRIMARY\s+KEY|UNIQUE)\s*\(([^)]*)\)\s*(NOT\s+ENFORCED)?\s*;?\s*""".r)
-  private val alterDropConstraintRe = new FlinkSql.Blanked(
+  private val alterDropConstraintRe = new SqlText.Blanked(
     """(?is)\s*ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*""".r)
-  private val alterRenameRe = new FlinkSql.Blanked(
+  private val alterRenameRe = new SqlText.Blanked(
     """(?is)\s*ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+RENAME\s+TO\s+((?:\w+\.){0,2}\w+)\s*""".r)
-  private val dropRe = new FlinkSql.Blanked(
+  private val dropRe = new SqlText.Blanked(
     """(?is)\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?((?:\w+\.){0,2}\w+)\s*""".r)
 
   /** ALTER TABLE ... SET (props) / RENAME TO / DROP TABLE on registered
@@ -535,7 +535,7 @@ object ConnectorTables {
     * TIMESTAMP(p) → TIMESTAMP, BYTES → BINARY). Returns None when the list
     * does not parse — self-describing formats never need it. */
   private[sql] def parseSchema(colsDdl: String): Option[StructType] = {
-    val cols = splitTop(colsDdl).filterNot { c =>
+    val cols = SqlText.splitTop(colsDdl).filterNot { c =>
       val u = c.trim.toUpperCase
       u.startsWith("PRIMARY KEY") || u.startsWith("CONSTRAINT") ||
         u.contains(" AS ") || metaColRe.findFirstIn(c.trim).isDefined
@@ -552,29 +552,6 @@ object ConnectorTables {
     }
     try Some(StructType.fromDDL(cleaned.mkString(", ")))
     catch { case _: Exception => None }
-  }
-
-  /** Split a column list on top-level commas (ignores commas inside
-    * parens like DECIMAL(10,2) and inside quoted strings). */
-  private def splitTop(s: String): Seq[String] = {
-    // structure from the literal-blanked text (escape-faithful — see
-    // EmitStrategy.splitTop, ADVICE r15), slices from the original
-    val b = FlinkSql.blankLiteralsAndComments(s)
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = 0
-    var i = 0
-    while (i < b.length) {
-      b.charAt(i) match {
-        case '(' | '<' => depth += 1
-        case ')' | '>' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 
   /** `'csv.field-delimiter'` → Spark csv reader/writer option `sep`, etc. —
@@ -779,7 +756,7 @@ object ConnectorTables {
       b.result()
     }
     if (quals.isEmpty) return sqlText
-    val probe = FlinkSql.blankLiteralsAndComments(sqlText)
+    val probe = SqlText.blank(sqlText)
     // INSERT statements are skipped only when their TARGET is a registered
     // connector table (tryInsert owns those and re-parses the query tail,
     // which resolves on re-entry); an INSERT into anything else falls
@@ -803,7 +780,7 @@ object ConnectorTables {
       (-q.length, if (cname.startsWith("@")) 0 else 1) }.foreach { case (q, cname) =>
       // trailing `.col` stays correct: `db.t.col` becomes `<view>.col`
       val re = ("(?i)(?<![\\w.`])" + java.util.regex.Pattern.quote(q) + "(?!\\w)").r
-      val blanked = FlinkSql.blankLiteralsAndComments(text)
+      val blanked = SqlText.blank(text)
       if (re.findFirstIn(blanked).isDefined) {
         val sb = new StringBuilder
         var last = 0
@@ -876,7 +853,7 @@ object ConnectorTables {
       // computed column on an inherited name needs OVERWRITING
       // (MergeTableLikeUtil.appendDerivedColumns:395-410)
       val computedRe = """(?is)^(\w+)\s+AS\s+(.+)$""".r
-      val items = Option(colsOpt).map(splitTop).getOrElse(Nil)
+      val items = Option(colsOpt).map(SqlText.splitTop).getOrElse(Nil)
       val derivedComputed = items.collect {
         case c if !c.trim.toUpperCase.startsWith("WATERMARK") &&
             computedRe.findFirstMatchIn(c.trim).isDefined =>

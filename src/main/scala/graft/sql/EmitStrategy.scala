@@ -63,15 +63,15 @@ object EmitStrategy {
     """(?i)\b(TUMBLE|HOP|SESSION|CUMULATE)\s*\(""".r.findFirstIn(probe).isDefined &&
       """(?i)\bGROUP\s+BY""".r.findFirstIn(probe).isDefined
 
-  private val shapeRe = new FlinkSql.Blanked(
+  private val shapeRe = new SqlText.Blanked(
     """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+TUMBLE\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   // Flink argument order: HOP(time, slide, size)
-  private val hopShapeRe = new FlinkSql.Blanked(
+  private val hopShapeRe = new SqlText.Blanked(
     """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+HOP\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
-  private val sessionShapeRe = new FlinkSql.Blanked(
+  private val sessionShapeRe = new SqlText.Blanked(
     """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+SESSION\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   // CUMULATE(time, step, max) — the cumulative-window TVF argument order
-  private[sql] val cumShapeRe = new FlinkSql.Blanked(
+  private[sql] val cumShapeRe = new SqlText.Blanked(
     """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+CUMULATE\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   private val tumbleStartRe =
     """(?is)^(?:TUMBLE_START|HOP_START|SESSION_START|CUMULATE_START)\s*\(.*?\)\s+AS\s+(\w+)$""".r
@@ -122,7 +122,7 @@ object EmitStrategy {
     var wsAlias = "w_start"
     var weAlias = "w_end"
     val aggBuilder = Seq.newBuilder[(String, String, String)]
-    FlinkSqlSupport.splitTop(select).foreach {
+    SqlText.splitTop(select).foreach {
       case cumEndRe(a) => weAlias = a
       case tumbleStartRe(a) => wsAlias = a
       case item if groupCols.contains(item.trim) => // group col, passes through
@@ -497,9 +497,9 @@ object CumulateSql {
       val uts = s"unix_micros(cast($tsCol as timestamp))"
       // blanked-located call rewrite: CUMULATE_START/END inside a string
       // literal in the select list stays a literal (family-30 discipline)
-      val items = FlinkSql.rewriteCalls(
-        FlinkSql.rewriteCalls(select, "CUMULATE_END", _ => "timestamp_micros(__we)"),
-        "CUMULATE_START", _ => "timestamp_micros(__ws)")
+      val items = FlinkSql.rewriteCalls(select, SqlText.blank(select), Seq(
+        "CUMULATE_END" -> (_ => "timestamp_micros(__we)"),
+        "CUMULATE_START" -> (_ => "timestamp_micros(__ws)")))
       val gTail = if (groupCols.isEmpty) "" else ", " + groupCols.mkString(", ")
       session.sql(
         s"""SELECT $items
@@ -515,28 +515,5 @@ object CumulateSql {
     case _ => throw new IllegalArgumentException(
       "CUMULATE supports: SELECT CUMULATE_START/END(..) AS a, <group cols>, <aggs> " +
         "FROM t GROUP BY CUMULATE(ts, step, max) [, group cols] [ORDER BY ...]")
-  }
-}
-
-/** Shared split helper (top-level commas, paren/quote aware). */
-private[sql] object FlinkSqlSupport {
-  def splitTop(s: String): Seq[String] = {
-    // cut offsets computed on the literal-blanked text (lexer-faithful:
-    // honors backslash and '' escapes — a naive quote toggle flipped the
-    // string state on escaped quotes and split mid-literal, ADVICE r15);
-    // slices come from the ORIGINAL (blanking preserves offsets)
-    val b = FlinkSql.blankLiteralsAndComments(s)
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = 0
-    b.zipWithIndex.foreach { case (c, i) =>
-      c match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i).trim; start = i + 1
-        case _ =>
-      }
-    }
-    out += s.substring(start).trim
-    out.result().filter(_.nonEmpty)
   }
 }

@@ -42,171 +42,82 @@ object FlinkSql {
     case other => other // already a string literal like '10 minutes'
   }
 
-  /** Split a top-level comma-separated argument list (respects nesting). */
-  private def splitArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = 0; var inStr = false
-    s.zipWithIndex.foreach { case (c, i) =>
-      c match {
-        case '\'' => inStr = !inStr
-        case '(' | '[' if !inStr => depth += 1
-        case ')' | ']' if !inStr => depth -= 1
-        case ',' if depth == 0 && !inStr =>
-          out += s.substring(start, i).trim; start = i + 1
-        case _ =>
-      }
-    }
-    out += s.substring(start).trim
-    out.result()
-  }
-
-  /** Replace every `name(args)` call (case-insensitive, nesting-aware) using
-    * `f(args)` to produce the replacement text. Matches are located on
-    * literal/comment-BLANKED text (offset-preserving), so a group-window
-    * keyword inside a string literal or comment — `SELECT 'TUMBLE(...)'` —
-    * is never rewritten (found by fuzz family 29). */
-  private[sql] def rewriteCalls(sql: String, name: String, f: Seq[String] => String): String = {
-    val pat = ("""(?i)\b""" + name + """\s*\(""").r
-    val sb = new StringBuilder
-    var rest = sql
-    var m = pat.findFirstMatchIn(blankLiteralsAndComments(rest))
-    while (m.isDefined) {
-      val mm = m.get
-      sb.append(rest.substring(0, mm.start))
-      // find the matching close paren
-      var depth = 1; var i = mm.end; var inStr = false
-      while (depth > 0 && i < rest.length) {
-        rest.charAt(i) match {
-          case '\'' => inStr = !inStr
-          case '(' if !inStr => depth += 1
-          case ')' if !inStr => depth -= 1
-          case _ =>
+  /** Replace every call of a function in `fns` (case-insensitive) with the
+    * text its rule builds from the call's arguments. Calls, their closing
+    * paren and their top-level commas are located on `blanked` (the
+    * [[SqlText.blank]] of `sql`), so a group-window keyword, paren, comma
+    * or quote inside a literal or comment — `SELECT 'TUMBLE(...)'`,
+    * `CASE WHEN k <> 'o\'clock)' ...` — is never rewritten (fuzz families
+    * 29 and 30). Arguments are rewritten before the call that holds them.
+    * A call whose paren never closes is left for Spark to report. */
+  private[sql] def rewriteCalls(sql: String, blanked: String,
+      fns: Seq[(String, Seq[String] => String)]): String = {
+    val rules = fns.map { case (name, f) => name.toUpperCase -> f }.toMap
+    val call = fns.map(_._1).mkString("(?i)\\b(", "|", ")\\s*\\(").r.pattern
+    def go(text: String, b: String): String = {
+      val m = call.matcher(b)
+      val sb = new java.lang.StringBuilder
+      var last = 0
+      var closed = true
+      while (closed && m.find(last)) {
+        val close = SqlText.closeParen(b, m.end)
+        closed = close >= 0
+        if (closed) {
+          val args = SqlText.topLevelItems(b.substring(m.end, close)).map { case (x, y) =>
+            go(text.substring(m.end + x, m.end + y), b.substring(m.end + x, m.end + y)).trim
+          }.filter(_.nonEmpty)
+          sb.append(text, last, m.start).append(rules(m.group(1).toUpperCase)(args))
+          last = close + 1
         }
-        i += 1
       }
-      val args = splitArgs(rest.substring(mm.end, i - 1))
-      sb.append(f(args))
-      rest = rest.substring(i)
-      m = pat.findFirstMatchIn(blankLiteralsAndComments(rest))
+      sb.append(text, last, text.length).toString
     }
-    sb.append(rest)
-    sb.toString
+    go(sql, blanked)
   }
 
-  /** Rewrite the Flink group-window dialect onto Spark SQL. */
-  def rewrite(sql: String): String = {
-    var s = sql
-    // auxiliary accessors first (TUMBLE_START would otherwise match TUMBLE)
-    s = rewriteCalls(s, "TUMBLE_START", _ => "window.start")
-    s = rewriteCalls(s, "TUMBLE_END", _ => "window.end")
-    s = rewriteCalls(s, "HOP_START", _ => "window.start")
-    s = rewriteCalls(s, "HOP_END", _ => "window.end")
-    s = rewriteCalls(s, "SESSION_START", _ => "session_window.start")
-    s = rewriteCalls(s, "SESSION_END", _ => "session_window.end")
+  private val windowCalls: Seq[(String, Seq[String] => String)] = Seq(
+    // auxiliary accessors
+    "TUMBLE_START" -> (_ => "window.start"),
+    "TUMBLE_END" -> (_ => "window.end"),
+    "HOP_START" -> (_ => "window.start"),
+    "HOP_END" -> (_ => "window.end"),
+    "SESSION_START" -> (_ => "session_window.start"),
+    "SESSION_END" -> (_ => "session_window.end"),
     // rowtime accessors: the reference returns end − 1 ms as the window's
     // event-time attribute (TimeWindow.maxTimestamp) so windows can cascade
     // — a 10-minute window's rowtime falls inside the covering hour
-    s = rewriteCalls(s, "TUMBLE_ROWTIME", _ => "(window.end - interval 1 millisecond)")
-    s = rewriteCalls(s, "HOP_ROWTIME", _ => "(window.end - interval 1 millisecond)")
-    s = rewriteCalls(s, "SESSION_ROWTIME", _ => "(session_window.end - interval 1 millisecond)")
-    s = rewriteCalls(s, "TUMBLE", {
+    "TUMBLE_ROWTIME" -> (_ => "(window.end - interval 1 millisecond)"),
+    "HOP_ROWTIME" -> (_ => "(window.end - interval 1 millisecond)"),
+    "SESSION_ROWTIME" -> (_ => "(session_window.end - interval 1 millisecond)"),
+    "TUMBLE" -> {
       case Seq(ts, size) => s"window($ts, ${intervalToDuration(size)})"
       case args => s"TUMBLE(${args.mkString(", ")})"
-    })
-    s = rewriteCalls(s, "HOP", {
+    },
+    "HOP" -> {
       case Seq(ts, slide, size) =>
         s"window($ts, ${intervalToDuration(size)}, ${intervalToDuration(slide)})"
       case args => s"HOP(${args.mkString(", ")})"
-    })
-    s = rewriteCalls(s, "SESSION", {
+    },
+    "SESSION" -> {
       case Seq(ts, gap) => s"session_window($ts, ${intervalToDuration(gap)})"
       case args => s"SESSION(${args.mkString(", ")})"
     })
-    s
-  }
 
-  /** Blank out single-quoted string literals and SQL comments (`--` and
-    * `/* */`) so keyword dispatch can't be fooled by a literal or comment
-    * containing MATCH_RECOGNIZE / FOR SYSTEM_TIME. Replacement preserves
-    * offsets (chars become spaces) — only used for the dispatch *test*; the
-    * original text is what gets parsed. */
-  private[sql] def blankLiteralsAndComments(sql: String): String = {
-    val out = sql.toCharArray
-    var i = 0
-    def blank(from: Int, until: Int): Unit = {
-      var k = from
-      while (k < until) { if (!out(k).isWhitespace) out(k) = ' '; k += 1 }
-    }
-    while (i < out.length) {
-      out(i) match {
-        case '\'' =>
-          // honor the lexer's escapes: backslash escapes the next char and
-          // a doubled '' is an escaped quote — neither closes the literal
-          var j = i + 1
-          var closed = false
-          while (j < out.length && !closed) {
-            out(j) match {
-              case '\\' => j += 2
-              case '\'' if j + 1 < out.length && out(j + 1) == '\'' => j += 2
-              case '\'' => closed = true
-              case _ => j += 1
-            }
-          }
-          blank(i + 1, math.min(j, out.length)); i = j + 1
-        case '-' if i + 1 < out.length && out(i + 1) == '-' =>
-          var j = i
-          while (j < out.length && out(j) != '\n') j += 1
-          blank(i, j); i = j
-        case '/' if i + 1 < out.length && out(i + 1) == '*' =>
-          var j = i + 2
-          while (j + 1 < out.length && !(out(j) == '*' && out(j + 1) == '/')) j += 1
-          blank(i, math.min(j + 2, out.length)); i = j + 2
-        case _ => i += 1
-      }
-    }
-    new String(out)
-  }
+  /** Rewrite the Flink group-window dialect onto Spark SQL. */
+  def rewrite(sql: String): String = rewrite(sql, SqlText.blank(sql))
 
-  /** Match `re` against the literal/comment-BLANKED text but slice every
-    * capture group from the ORIGINAL (blanking preserves offsets). The
-    * structural anchors of a front-end shape regex then can NOT be
-    * satisfied by keywords inside string literals or comments — e.g. a
-    * SELECT-list literal containing " FROM t GROUP BY TUMBLE(" no longer
-    * steals the FROM clause — while captured fragments (select lists,
-    * predicates) keep their literals intact for re-emission. The
-    * dispatch-safety discipline fuzz family 30 enforces on every
-    * text rewriter. Unanchored (findFirstMatchIn semantics). */
-  private[sql] def blankedMatch(re: scala.util.matching.Regex, sql: String)
-      : Option[IndexedSeq[String]] =
-    re.findFirstMatchIn(blankLiteralsAndComments(sql)).map { m =>
-      (1 to m.groupCount).map(i =>
-        if (m.start(i) < 0) null else sql.substring(m.start(i), m.end(i)))
-    }
-
-  /** [[blankedMatch]] packaged as an extractor, so a front-end shape regex
-    * keeps its `sql match { case shapeRe(groups...) => }` style while
-    * locating structure on blanked text and slicing groups from the
-    * original. FULL-match semantics, exactly like Scala's own
-    * Regex.unapplySeq. */
-  private[sql] class Blanked(re: scala.util.matching.Regex) {
-    def matches(sql: String): Boolean = unapplySeq(sql).isDefined
-    def unapplySeq(sql: String): Option[List[String]] = {
-      val m = re.pattern.matcher(blankLiteralsAndComments(sql))
-      if (!m.matches()) None
-      else Some((1 to m.groupCount()).toList.map(i =>
-        if (m.start(i) < 0) null else sql.substring(m.start(i), m.end(i))))
-    }
-  }
+  /** [[rewrite]] for a statement whose blanked text is already at hand. */
+  private[sql] def rewrite(sql: String, blanked: String): String =
+    rewriteCalls(sql, blanked, windowCalls)
 
   /** Parser delegate: MATCH_RECOGNIZE routes to the CEP front-end;
     * everything else is dialect-rewritten and handed to Spark's parser. */
   class Parser(session: SparkSession, delegate: ParserInterface) extends ParserInterface {
     /** front-end dispatch: MATCH_RECOGNIZE / FOR SYSTEM_TIME AS OF clauses
       * build their plan through the custom operators; None = plain dialect.
-      * The keyword test runs on literal/comment-stripped text so e.g. a
+      * The keyword tests run on `probe`, the blanked statement, so e.g. a
       * query selecting the string 'MATCH_RECOGNIZE(' parses normally. */
-    private def frontEnd(sqlText: String): Option[LogicalPlan] = {
-      val probe = blankLiteralsAndComments(sqlText)
+    private def frontEnd(sqlText: String, probe: String): Option[LogicalPlan] = {
       // lineage registry for view-chained temporal joins: a plain CREATE
       // VIEW still parses through the stock path below; only its
       // view → base-table edge is recorded here
@@ -237,20 +148,20 @@ object FlinkSql {
       else if (ConnectorTables.matchesInsert(probe))
         ConnectorTables.tryInsert(session, sqlText)
           .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(rewrite(sqlText))))
+          .orElse(Some(delegate.parsePlan(rewrite(sqlText, probe))))
       // ALTER TABLE SET/RENAME + DROP TABLE on registered connector tables;
       // statements naming other tables fall through to Spark's own DDL
       else if (ConnectorTables.matchesAlterOrDrop(probe))
         ConnectorTables.tryAlterOrDrop(session, sqlText)
           .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(rewrite(sqlText))))
+          .orElse(Some(delegate.parsePlan(rewrite(sqlText, probe))))
       // SHOW PARTITIONS on registered partitioned connector tables — the
       // reference's `partition name` k=v/k2=v2 result; other tables fall
       // through to Spark's native statement
       else if (ConnectorTables.matchesShowPartitions(probe))
         ConnectorTables.tryShowPartitions(session, sqlText)
           .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(rewrite(sqlText))))
+          .orElse(Some(delegate.parsePlan(rewrite(sqlText, probe))))
       // SHOW DATABASES/TABLES/VIEWS/FUNCTIONS with the reference's result
       // column names, built over the DELEGATE parser so the dispatch can't
       // loop (CREATE/ALTER DATABASE property clauses are text rewrites in
@@ -305,23 +216,27 @@ object FlinkSql {
       * spellings (EXPLAIN PLAN FOR) and the
       * OPTIONS dynamic-table-options hint comment (resolved to a
       * per-query view — Spark's grammar only admits hints after SELECT, so
-      * the table-attached spelling must leave the text before parsing). */
-    private def preprocess(sqlText: String): String =
-      ConnectorTables.resolveQualified(session,
-        OptionsHint.rewrite(session,
-          DatabaseDdl.rewrite(UtilityStatements.rewrite(sqlText))))
+      * the table-attached spelling must leave the text before parsing).
+      * Returns the statement with its blanked text: the statement is lexed
+      * once, and again only if the hint or qualified-name pass changed it. */
+    private def preprocess(sqlText: String): (String, String) = {
+      val t = DatabaseDdl.rewrite(UtilityStatements.rewrite(sqlText))
+      val probe = SqlText.blank(t)
+      val out = ConnectorTables.resolveQualified(session, OptionsHint.rewrite(session, t, probe))
+      (out, if (out eq t) probe else SqlText.blank(out))
+    }
 
     override def parsePlan(sqlText: String): LogicalPlan = {
-      val t = preprocess(sqlText)
-      frontEnd(t).getOrElse(delegate.parsePlan(rewrite(t)))
+      val (t, probe) = preprocess(sqlText)
+      frontEnd(t, probe).getOrElse(delegate.parsePlan(rewrite(t, probe)))
     }
     override def parseQuery(sqlText: String): LogicalPlan = {
-      val t = preprocess(sqlText)
-      frontEnd(t).getOrElse(delegate.parseQuery(rewrite(t)))
+      val (t, probe) = preprocess(sqlText)
+      frontEnd(t, probe).getOrElse(delegate.parseQuery(rewrite(t, probe)))
     }
     override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan = {
-      val t = preprocess(sqlText)
-      frontEnd(t).getOrElse(delegate.parsePlanWithParameters(rewrite(t), ctx))
+      val (t, probe) = preprocess(sqlText)
+      frontEnd(t, probe).getOrElse(delegate.parsePlanWithParameters(rewrite(t, probe), ctx))
     }
     override def parseExpression(sqlText: String): Expression =
       delegate.parseExpression(rewrite(sqlText))

@@ -87,11 +87,11 @@ object MatchRecognize {
   }
 
   // the statement shape matches on literal/comment-BLANKED text with
-  // groups sliced from the original (FlinkSql.Blanked), and every clause
-  // scan below runs through FlinkSql.blankedMatch the same way — a DEFINE
+  // groups sliced from the original (SqlText.Blanked), and every clause
+  // scan below runs through SqlText.blankedMatch the same way — a DEFINE
   // predicate literal containing "PATTERN (" / "WITHIN INTERVAL ..." /
   // "AFTER MATCH ..." can no longer steal a clause (fuzz family 30)
-  private val mrRe = new FlinkSql.Blanked(
+  private val mrRe = new SqlText.Blanked(
     """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+MATCH_RECOGNIZE\s*\((.*)\)\s*(ORDER\s+BY.*)?""".r)
   private val partRe = """(?is)PARTITION\s+BY\s+(\w+(?:\s*,\s*\w+)*)""".r
   private val ordRe = """(?is)ORDER\s+BY\s+(\w+)""".r
@@ -150,28 +150,8 @@ object MatchRecognize {
   }
 
   private def parseMeasures(body: String): Seq[Measure] = {
-    val clause = FlinkSql.blankedMatch(measuresRe, body).map(_.head).getOrElse(return Nil)
-    // split on top-level commas (measure exprs may contain nested parens
-    // and string literals — both respected)
-    val items = {
-      // structure from the literal-blanked text (escape-faithful — see
-      // EmitStrategy.splitTop, ADVICE r15), slices from the original
-      val b = FlinkSql.blankLiteralsAndComments(clause)
-      val out = Seq.newBuilder[String]
-      var depth = 0; var start = 0
-      b.zipWithIndex.foreach { case (c, i) =>
-        c match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case ',' if depth == 0 =>
-            out += clause.substring(start, i).trim; start = i + 1
-          case _ =>
-        }
-      }
-      out += clause.substring(start).trim
-      out.result().filter(_.nonEmpty)
-    }
-    items.map {
+    val clause = SqlText.blankedMatch(measuresRe, body).map(_.head).getOrElse(return Nil)
+    SqlText.splitTop(clause).map {
       case aggMeasureRe(mode, fn, inner, alias) =>
         val running = mode == null || !mode.equalsIgnoreCase("FINAL")
         val in = inner.trim
@@ -193,30 +173,30 @@ object MatchRecognize {
 
   def parse(sql: String): Spec = sql.trim match {
     case mrRe(select, table, body, tail) =>
-      val part = FlinkSql.blankedMatch(partRe, body).map(_.head)
+      val part = SqlText.blankedMatch(partRe, body).map(_.head)
         .getOrElse(throw new IllegalArgumentException("PARTITION BY required"))
-      val ord = FlinkSql.blankedMatch(ordRe, body).map(_.head)
+      val ord = SqlText.blankedMatch(ordRe, body).map(_.head)
         .getOrElse(throw new IllegalArgumentException("ORDER BY required"))
-      val skip = FlinkSql.blankedMatch(skipRe, body) match {
+      val skip = SqlText.blankedMatch(skipRe, body) match {
         case Some(g) if g(1) != null =>
           Cep.SkipToVar(g(2), g(1).equalsIgnoreCase("FIRST"))
         case Some(g) if g(0).toUpperCase.startsWith("TO") => Cep.SkipToNextRow
         case _ => Cep.SkipPastLastRow
       }
-      val pattern = FlinkSql.blankedMatch(patRe, body)
+      val pattern = SqlText.blankedMatch(patRe, body)
         .map(g => parsePattern(g.head))
         .getOrElse(throw new IllegalArgumentException("PATTERN required"))
-      val within = FlinkSql.blankedMatch(withinRe, body)
+      val within = SqlText.blankedMatch(withinRe, body)
         .map(g => g(0).toLong * unitMicros(g(1)))
         .getOrElse(Long.MaxValue)
-      val defBody = FlinkSql.blankedMatch(defineRe, body).map(_.head)
+      val defBody = SqlText.blankedMatch(defineRe, body).map(_.head)
         .getOrElse(throw new IllegalArgumentException("DEFINE required"))
       // split "A AS pred, B AS pred" on top-level commas preceding
       // "<var> AS" — cut points located on blanked text so a predicate
       // literal containing ", X AS ..." stays one predicate
       val defSplitRe = """(?i),(?=\s*\w+\s+AS\s)""".r
       val defCuts = defSplitRe
-        .findAllMatchIn(FlinkSql.blankLiteralsAndComments(defBody)).map(_.start).toSeq
+        .findAllMatchIn(SqlText.blank(defBody)).map(_.start).toSeq
       val defItems = (Seq(-1) ++ defCuts :+ defBody.length).sliding(2).map {
         case Seq(a, b) => defBody.substring(a + 1, b)
       }.toSeq
@@ -239,7 +219,7 @@ object MatchRecognize {
       val defines = defPairs.map(p => (p._1, p._3)).toMap
       val rawDefines = defPairs.map(p => (p._1, p._2)).toMap
       val allRows = """(?i)ALL\s+ROWS\s+PER\s+MATCH""".r
-        .findFirstIn(FlinkSql.blankLiteralsAndComments(body)).isDefined
+        .findFirstIn(SqlText.blank(body)).isDefined
       val partCols = part.split(",").map(_.trim).toSeq
       Spec(table, partCols.head, ord, skip, pattern, within, defines, rawDefines,
         parseMeasures(body), allRows, select.trim, Option(tail).getOrElse("").trim,

@@ -45,48 +45,26 @@ object OptionsHint {
     "LATERAL", "SEMI", "ANTI", "ON", "USING", "UNION", "EXCEPT", "INTERSECT",
     "MINUS", "WINDOW", "MATCH_RECOGNIZE", "FOR", "TABLESAMPLE", "AS")
 
-  /** Offset-preserving blank of single-quoted literal CONTENT only (quotes
-    * stay), so a literal containing the hint spelling can't dispatch — the
-    * reference parses hints structurally, where literals are inert.
-    * Mirrors Spark's default lexer escapes: a backslash escapes the next
-    * character (so 'it\'s' does not close the literal) and a doubled ''
-    * is an escaped quote, not close+open — both stay literal content. */
-  private def blankLiterals(sql: String): String = {
-    val out = sql.toCharArray
-    var i = 0; var inStr = false
-    while (i < out.length) {
-      val c = out(i)
-      if (inStr && c == '\\' && i + 1 < out.length) {
-        out(i) = ' '
-        if (!out(i + 1).isWhitespace) out(i + 1) = ' '
-        i += 1
-      } else if (inStr && c == '\'' && i + 1 < out.length && out(i + 1) == '\'') {
-        out(i) = ' '; out(i + 1) = ' '
-        i += 1
-      } else if (c == '\'') inStr = !inStr
-      else if (inStr && !c.isWhitespace) out(i) = ' '
-      i += 1
-    }
-    new String(out)
-  }
-
-  def matches(sqlText: String): Boolean =
-    """(?is)/\*\+\s*OPTIONS\s*\(""".r.findFirstIn(blankLiterals(sqlText)).isDefined
+  /** `probe` is the [[SqlText.blank]] of the statement: literals and
+    * comments are blanked there while a hint stays visible, so neither a
+    * literal nor a `--` comment spelling the hint can dispatch — the
+    * reference parses hints structurally, where both are inert. */
+  def matches(probe: String): Boolean =
+    """(?is)/\*\+\s*OPTIONS\s*\(""".r.findFirstIn(probe).isDefined
 
   /** Resolve every OPTIONS hint in `sqlText`; returns the text unchanged
-    * when no hint is present. Hints are LOCATED on the literal-blanked
-    * text (offset-preserving) and the replacement splices the ORIGINAL —
-    * a string literal containing the hint spelling survives verbatim. */
-  def rewrite(spark: SparkSession, sqlText: String): String = {
-    if (!matches(sqlText)) return sqlText
+    * when no hint is present. Hints are LOCATED on `probe`, the blanked
+    * text, and the replacement splices the ORIGINAL — a string literal
+    * containing the hint spelling survives verbatim. */
+  def rewrite(spark: SparkSession, sqlText: String, probe: String): String = {
+    if (!matches(probe)) return sqlText
     if (!spark.conf.getOption(ConfKey).exists(_.equalsIgnoreCase("true")))
       // CatalogSourceTable.java:250-257, message shape preserved
       throw new IllegalArgumentException(
         s"The 'OPTIONS' hint is allowed only when the config option '$ConfKey' is set to true.")
-    val blanked = blankLiterals(sqlText)
     val sb = new StringBuilder
     var last = 0
-    hintRe.findAllMatchIn(blanked).foreach { m =>
+    hintRe.findAllMatchIn(probe).foreach { m =>
       val name = m.group(1)
       val tbl = ConnectorTables.lookup(spark, name).getOrElse(
         throw new IllegalArgumentException(

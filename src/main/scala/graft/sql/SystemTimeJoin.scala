@@ -121,10 +121,10 @@ object SystemTimeJoin {
     """(?i)FOR\s+SYSTEM_TIME\s+AS\s+OF""".r.findFirstIn(sql).isDefined
 
   // statement shape located on literal/comment-BLANKED text, groups
-  // sliced from the original (FlinkSql.Blanked) — a SELECT-list literal
+  // sliced from the original (SqlText.Blanked) — a SELECT-list literal
   // containing " FROM a JOIN b FOR SYSTEM_TIME ..." cannot steal the
   // clause (fuzz family 30)
-  private val stRe = new FlinkSql.Blanked(
+  private val stRe = new SqlText.Blanked(
     ("""(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?(?!JOIN\b|LEFT\b)(\w+))?""" +
      """\s+(LEFT\s+)?JOIN\s+(\w+)(?:\s+(?:AS\s+)?(?!FOR\b)(\w+))?""" +
      """\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+([\w.]+(?:\(\s*\))?)""" +
@@ -159,11 +159,12 @@ object SystemTimeJoin {
     val nameRe = """(?is)^\s*,?\s*(\w+)\s+AS\s*\(""".r
     var main: Option[String] = None
     while (main.isEmpty) {
-      nameRe.findFirstMatchIn(FlinkSql.blankLiteralsAndComments(rest)) match {
+      val blanked = SqlText.blank(rest)
+      nameRe.findFirstMatchIn(blanked) match {
         case Some(m) =>
-          val (body, after) = balanced(rest, m.end)
-          runAny(spark, body).createOrReplaceTempView(m.group(1))
-          rest = after
+          val close = closeParen(blanked, m.end)
+          runAny(spark, rest.substring(m.end, close)).createOrReplaceTempView(m.group(1))
+          rest = rest.substring(close + 1)
           if (!"""(?s)^\s*,""".r.findFirstIn(rest).isDefined) main = Some(rest)
         case None => main = Some(rest)
       }
@@ -171,31 +172,22 @@ object SystemTimeJoin {
     runAny(spark, main.get.trim)
   }
 
-  /** `rest(openEnd-1) == '('`: returns (contents, text after the close).
-    * Parens are counted on literal/comment-BLANKED text (lexer-faithful
-    * escapes), so a paren inside a string literal never unbalances the
-    * split; the returned slices are from the ORIGINAL. */
-  private def balanced(rest: String, openEnd: Int): (String, String) = {
-    val b = FlinkSql.blankLiteralsAndComments(rest)
-    var depth = 1; var i = openEnd
-    while (depth > 0) {
-      b.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    (rest.substring(openEnd, i - 1), rest.substring(i))
+  private def closeParen(blanked: String, openEnd: Int): Int = {
+    val close = SqlText.closeParen(blanked, openEnd)
+    if (close < 0) throw new IllegalArgumentException(
+      "FOR SYSTEM_TIME statement: a parenthesis never closes")
+    close
   }
 
   /** Replace every FROM/JOIN derived table with a temp view of its
     * evaluated body; returns the rewritten statement (identity if none). */
   private def subqueryRewrite(spark: SparkSession, sql: String): String = {
     val fromRe = """(?is)\b(FROM|JOIN)\s*\(""".r
-    fromRe.findFirstMatchIn(FlinkSql.blankLiteralsAndComments(sql)) match {
+    val blanked = SqlText.blank(sql)
+    fromRe.findFirstMatchIn(blanked) match {
       case Some(m) =>
-        val (body, after) = balanced(sql, m.end)
+        val close = closeParen(blanked, m.end)
+        val (body, after) = (sql.substring(m.end, close), sql.substring(close + 1))
         val aliasRe = """(?is)^\s*(?:AS\s+)?(\w+)""".r
         val (alias, rest) = aliasRe.findFirstMatchIn(after) match {
           // FOR would be the start of the snapshot clause, not an alias

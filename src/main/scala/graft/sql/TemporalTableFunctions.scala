@@ -114,9 +114,9 @@ object TemporalTableFunctions {
     latHeadRe.findAllMatchIn(sql).exists(m => registry.contains(m.group(1).toLowerCase))
 
   // located on literal/comment-BLANKED text, groups sliced from the
-  // original (FlinkSql.Blanked) — a SELECT-list literal containing
+  // original (SqlText.Blanked) — a SELECT-list literal containing
   // ", LATERAL TABLE(" cannot steal the lateral head (fuzz family 30)
-  private val headRe = new FlinkSql.Blanked(
+  private val headRe = new SqlText.Blanked(
     """(?is)^\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?\s*,\s*(LATERAL\s+TABLE.*)$""".r)
   private val latRe =
     ("""(?is)^LATERAL\s+TABLE\s*\(\s*(\w+)\s*\(\s*([\w.]+(?:\(\s*\))?)\s*\)\s*\)""" +
@@ -150,12 +150,12 @@ object TemporalTableFunctions {
       // WHERE conjunction + trailing clauses — clause boundary and AND
       // cuts located on blanked text (a predicate literal containing
       // " AND " or " ORDER" stays inside its conjunct)
-      val whereRe = new FlinkSql.Blanked(
+      val whereRe = new SqlText.Blanked(
         """(?is)^WHERE\s+(.*?)\s*((?:ORDER|GROUP|LIMIT)\b.*)?$""".r)
       val (conjuncts, tail) = rest match {
         case whereRe(conds, t) =>
           val cuts = """(?i)\s+AND\s+""".r
-            .findAllMatchIn(FlinkSql.blankLiteralsAndComments(conds)).toVector
+            .findAllMatchIn(SqlText.blank(conds)).toVector
           var pos = 0
           val parts = Vector.newBuilder[String]
           cuts.foreach { c => parts += conds.substring(pos, c.start).trim; pos = c.end }

@@ -41,7 +41,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * requiring a programmatic declareWatermark call.
   *
   * Statement shapes are located on literal/comment-BLANKED text with
-  * groups sliced from the original ([[FlinkSql.Blanked]]) — a computed
+  * groups sliced from the original ([[SqlText.Blanked]]) — a computed
   * column whose default literal contains "WATERMARK FOR ..." never
   * hijacks the clause (fuzz family 30 discipline).
   */
@@ -55,9 +55,9 @@ object WatermarkDdl {
       """(?i)\bWATERMARK\s+FOR\b""".r.findFirstIn(probe).isDefined &&
       !ConnectorTables.matchesLike(probe)
 
-  private val viewRe = new FlinkSql.Blanked(
+  private val viewRe = new SqlText.Blanked(
     """(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?VIEW\s+(\w+)\s+WATERMARK\s+FOR\s+(\w+)\s+AS\s+(.+?)\s+AS\s+(SELECT\s.*)""".r)
-  private val tableRe = new FlinkSql.Blanked(
+  private val tableRe = new SqlText.Blanked(
     """(?is)\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?((?:\w+\.){0,2}\w+)\s*\((.*)\)\s*WITH\s*\((.*)\)\s*;?\s*""".r)
   /** The structural `[col] - INTERVAL 'n' unit` family (the overwhelmingly
     * common spelling); anything else goes through [[delayByProbe]]. */
@@ -75,8 +75,8 @@ object WatermarkDdl {
     * blanked text, sliced from the original. The expression runs to the
     * end of its top-level column-list item. */
   private[sql] def parseWm(colsDdl: String): Option[Wm] =
-    FlinkSqlSupport.splitTop(colsDdl).iterator
-      .flatMap(item => FlinkSql.blankedMatch(wmRe, item))
+    SqlText.splitTop(colsDdl).iterator
+      .flatMap(item => SqlText.blankedMatch(wmRe, item))
       .nextOption()
       .map(g => Wm(g(0), g(1).trim))
 
@@ -162,8 +162,8 @@ object WatermarkDdl {
       // are applied on top in declaration order, so later ones may
       // reference earlier ones — the reference's generated-column flow.
       val computedRe = """(?is)^(\w+)\s+AS\s+(.+)$""".r
-      val computedCols = FlinkSqlSupport.splitTop(schemaBody).collect {
-        case i if FlinkSql.blankedMatch(wmRe, i).isEmpty &&
+      val computedCols = SqlText.splitTop(schemaBody).collect {
+        case i if SqlText.blankedMatch(wmRe, i).isEmpty &&
             computedRe.findFirstMatchIn(i.trim).isDefined =>
           val m = computedRe.findFirstMatchIn(i.trim).get
           (m.group(1), m.group(2).trim)

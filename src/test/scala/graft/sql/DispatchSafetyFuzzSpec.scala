@@ -5,14 +5,16 @@ import graft.SparkSpec
 /** Fuzz family 29: front-end DISPATCH SAFETY.
   *
   * The SQL surface is routed by keyword probes over literal/comment-blanked
-  * text ([[FlinkSql.blankLiteralsAndComments]] + per-front-end regexes).
+  * text ([[SqlText.blank]], the one lexer, + per-front-end regexes).
   * The regression class that architecture carries is OVERCAPTURE: a
   * statement that merely LOOKS like a front-end shape being swallowed,
   * rewritten, or failed instead of reaching Spark's parser untouched.
   *
   * This family sweeps seeded randomized NEAR-MISS statements — front-end
-  * keywords inside string literals (with both '' and \' escapes), inside
-  * line and block comments, native DDL without the connector's WITH
+  * keywords inside string literals (with both '' and \' escapes) and
+  * double-quoted literals, inside line, block and nested block comments,
+  * after a backquoted identifier holding a quote, a hint spelled inside a
+  * line comment, native DDL without the connector's WITH
   * clause, native hints, INSERTs into non-connector tables, DESCRIBE of
   * plain relations — and asserts each one both RUNS through Spark and
   * returns the exact expected result. A dispatch leak fails loudly with
@@ -66,7 +68,22 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
         val c = spark.sql(
           s"-- $payload\nSELECT /* $payload */ sum(id) AS t FROM fz29_t").collect().head
         assert(c.getLong(0) == 10L, s"family29 comment case broke for: $payload")
-        checked += 2
+        // 3. the unescaped payload inside a double-quoted literal
+        val dq = spark.sql(s"""SELECT "$expect" AS p FROM fz29_t WHERE id = 0""").collect().head
+        assert(dq.getString(0) == expect, s"family29 double-quoted roundtrip broke for: $expect")
+        // 4. a nested block comment (the payload sits after the inner
+        // close) and a hint spelled inside a line comment: both are comments
+        val nc = spark.sql(
+          s"""SELECT /* a /* b */ $payload */ sum(id) AS t FROM fz29_t
+              -- was /*+ OPTIONS('k'='v') */
+              WHERE id >= 0""").collect().head
+        assert(nc.getLong(0) == 10L, s"family29 nested/line comment broke for: $payload")
+        // 5. a backquoted identifier holding a quote does not open a literal
+        val bq = spark.sql(
+          s"SELECT id AS `a'b`, '$payload' AS p FROM fz29_t WHERE id = 0").collect().head
+        assert(bq.schema.fieldNames.head == "a'b" && bq.getString(1) == expect,
+          s"family29 backquoted-quote case broke for: $payload")
+        checked += 5
       }
     }
     // 3. native statements adjacent to front-end shapes stay native
@@ -93,7 +110,7 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
       checked += 4
     } finally spark.sql("DROP TABLE IF EXISTS fz29_native")
     println(s"[fuzz] family29 checked=$checked")
-    assert(checked >= 72)
+    assert(checked >= 184)
   }
 
   /** Family 30: hazard literals INSIDE genuinely-matching front-end
@@ -101,7 +118,7 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
     * family proves a statement a rewriter DOES own cannot have its clauses
     * stolen by front-end keywords sitting in its own string literals —
     * every shape regex and clause scan must locate on blanked text and
-    * slice from the original (FlinkSql.Blanked / blankedMatch). Each case
+    * slice from the original (SqlText.Blanked / blankedMatch). Each case
     * runs a hazard-free CONTROL and the hazard variant and asserts
     * identical semantics. */
   test("family 30: hazard literals inside matching statements never steal clauses") {
@@ -119,7 +136,7 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
     ev.createOrReplaceTempView("fz30_ev")
 
     // both lexer escape spellings must survive the blanked-match path;
-    // the mode is seeded per hazard (blankLiteralsAndComments honors both)
+    // the mode is seeded per hazard (SqlText.blank honors both)
     def escWith(r: scala.util.Random)(p: String): String =
       if (r.nextBoolean()) p.replace("'", "''") else p.replace("'", "\\'")
 
@@ -143,6 +160,27 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
           s"family30 tumble hazard changed the window plan: $hzd")
         assert(h.forall(_._3 == hzd), s"family30 tumble literal corrupted: $hzd")
         checked += 1
+      }
+
+      // --- group windows: a hazard literal INSIDE the window call's time
+      // argument, in both escape spellings and double-quoted — the call's
+      // close paren and top-level commas must be found on blanked text
+      locally {
+        val hzd = Seq("o'clock)", "it's, (x", "TUMBLE(ts, INTERVAL '1' MINUTE))")(r.nextInt(3))
+        def q(lit: String) = spark.sql(
+          s"""SELECT TUMBLE_START(CASE WHEN event_type <> $lit THEN ts END,
+                                  INTERVAL '20' SECOND) AS ws, count(*) AS n
+              FROM fz30_ev
+              GROUP BY TUMBLE(CASE WHEN event_type <> $lit THEN ts END, INTERVAL '20' SECOND)
+              ORDER BY ws""")
+          .collect().map(rr => (rr.getTimestamp(0), rr.getLong(1))).toSeq
+        val c = q("'zzz'")
+        assert(c.map(_._2) == Seq(4L, 4L), "family30 window-argument control broke")
+        Seq(s"'${hzd.replace("'", "''")}'", s"'${hzd.replace("'", "\\'")}'", "\"" + hzd + "\"")
+          .foreach { lit =>
+            assert(q(lit) == c, s"family30 hazard inside the window argument: $lit")
+            checked += 1
+          }
       }
 
       // --- CUMULATE (batch TVF path): hazard in a verbatim select item
@@ -299,6 +337,6 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
     }
 
     println(s"[fuzz] family30 checked=$checked")
-    assert(checked >= 23)
+    assert(checked >= 32)
   }
 }

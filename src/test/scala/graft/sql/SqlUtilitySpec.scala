@@ -750,6 +750,19 @@ class SqlUtilitySpec extends SparkSpec {
       Seq("name", "type", "null", "key", "extras", "watermark"))
     assert(q.collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq ==
       Seq(("x", "BIGINT", false), ("y", "STRING", true)))
+    // a computed column holding a comparison: its `>` is no bracket, so the
+    // list still splits into three columns and `b` stays in the read schema
+    val dir4 = freshDir("desc6d")
+    Seq((1L, "x"), (2L, "y")).toDF("a", "b").write.mode("overwrite").parquet(dir4)
+    spark.sql(s"""CREATE TABLE desc_t4 (a BIGINT, flag AS a > 1, b STRING)
+                  WITH ('connector' = 'filesystem', 'path' = '$dir4',
+                        'format' = 'parquet')""")
+    assert(spark.sql("DESCRIBE desc_t4").collect()
+      .map(r => (r.getString(0), r.getString(4))).toSeq ==
+      Seq(("a", null), ("flag", "AS a > 1"), ("b", null)))
+    assert(spark.sql("SELECT a, flag, b FROM desc_t4 ORDER BY a").collect()
+      .map(r => (r.getLong(0), r.getBoolean(1), r.getString(2))).toSeq ==
+      Seq((1L, false, "x"), (2L, true, "y")))
   }
 
   test("DESCRIBE fidelity: derived nullability, ROW field-name case, every relation six-column") {

@@ -179,4 +179,73 @@ class TemporalTableFunctionsSpec extends SparkSpec {
     // backslash-escaped quote does not close the literal (Spark's lexer)
     assert(SqlText.stripQualifiers("'it\\'s la.' || la.c", Seq("la")) == "'it\\'s la.' || c")
   }
+
+  test("SqlText.blank: one lexer, offsets kept, only literal and comment content blanked") {
+    // (token kind, input, blanked); a token's quotes stay, its content blanks
+    val cases = Seq(
+      ("STRING_LITERAL", "f('a,(b') + 1", "f('    ') + 1"),
+      ("STRING_LITERAL \\x escape", "'it\\'s (' x", "'       ' x"),
+      ("STRING_LITERAL '' escape", "'it''s (' x", "'       ' x"),
+      ("raw STRING_LITERAL", "R'a\\' x", "R'  ' x"),
+      ("raw double-quoted STRING_LITERAL", "r\"a\\\" x", "r\"  \" x"),
+      ("R ending a word is no raw prefix", "fooR'a\\'b' x", "fooR'    ' x"),
+      ("DOUBLEQUOTED_STRING", "\"TUMBLE(ts, 'x')\" AS p", "\"               \" AS p"),
+      ("DOUBLEQUOTED_STRING \"\" escape", "\"a\"\"b\" c", "\"    \" c"),
+      ("BACKQUOTED_IDENTIFIER", "`a'b` = 'c'", "`   ` = ' '"),
+      ("BACKQUOTED_IDENTIFIER `` escape", "`a``b` x", "`    ` x"),
+      ("SIMPLE_COMMENT", "a -- it's (\nb", "a          \nb"),
+      ("SIMPLE_COMMENT continued by backslash-newline", "a -- x\\\ny\nb", "a      \n \nb"),
+      ("BRACKETED_COMMENT", "a /* 'x */ b", "a          b"),
+      ("nested BRACKETED_COMMENT", "a /* x /* y */ 'z */ b", "a                    b"),
+      ("hint stays structure", "SELECT /*+ OPTIONS('k'='v') */ 1", "SELECT /*+ OPTIONS(' '=' ') */ 1"),
+      ("hint inside a comment does not nest", "/* /*+ x */ y", "            y"),
+      ("unterminated STRING_LITERAL", "a 'b, (c", "a '     "),
+      ("unterminated BRACKETED_COMMENT", "a /* b", "a     "))
+    cases.foreach { case (kind, in, want) =>
+      val got = SqlText.blank(in)
+      assert(got.length == in.length, kind)
+      assert(in.indices.forall(i => got(i) == in(i) || (got(i) == ' ' && !in(i).isWhitespace)), kind)
+      assert(got == want, s"$kind: [$got] != [$want]")
+    }
+
+    // Spark's own lexer agrees on every terminated case: quoted-token
+    // content and hidden-channel comments blank, every other char stays
+    // (its keywords are upper case, and the ASCII inputs keep their offsets)
+    import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+    cases.filterNot(_._1.startsWith("unterminated")).foreach { case (kind, in, _) =>
+      val lexer = new SqlBaseLexer(org.antlr.v4.runtime.CharStreams.fromString(in.toUpperCase))
+      lexer.removeErrorListeners()
+      val want = in.toCharArray
+      def clear(a: Int, b: Int): Unit = (a until b).foreach(i => if (!want(i).isWhitespace) want(i) = ' ')
+      var t = lexer.nextToken()
+      while (t.getType != org.antlr.v4.runtime.Token.EOF) {
+        val (a, b) = (t.getStartIndex, t.getStopIndex + 1)
+        t.getType match {
+          case SqlBaseLexer.SIMPLE_COMMENT | SqlBaseLexer.BRACKETED_COMMENT => clear(a, b)
+          case SqlBaseLexer.STRING_LITERAL | SqlBaseLexer.DOUBLEQUOTED_STRING |
+               SqlBaseLexer.BACKQUOTED_IDENTIFIER =>
+            clear(if (in(a).toUpper == 'R') a + 2 else a + 1, b - 1)
+          case _ =>
+        }
+        t = lexer.nextToken()
+      }
+      assert(SqlText.blank(in) == new String(want), s"$kind disagrees with SqlBaseLexer")
+    }
+  }
+
+  test("SqlText.splitTop / closeParen: brackets are ( ) [ ] and type-constructor < >") {
+    assert(SqlText.splitTop("a INT, flag AS a > 1, b STRING") ==
+      Seq("a INT", "flag AS a > 1", "b STRING"))
+    assert(SqlText.splitTop("a INT, f AS a < 1, b STRING") ==
+      Seq("a INT", "f AS a < 1", "b STRING"))
+    assert(SqlText.splitTop("m MAP<STRING, INT>, ts TIMESTAMP(3)") ==
+      Seq("m MAP<STRING, INT>", "ts TIMESTAMP(3)"))
+    assert(SqlText.splitTop("r ROW<a ARRAY<INT>, b DECIMAL(10, 2)>, x AS f(',', 'y''z'), c") ==
+      Seq("r ROW<a ARRAY<INT>, b DECIMAL(10, 2)>", "x AS f(',', 'y''z')", "c"))
+    assert(SqlText.splitTop("s STRUCT<a: INT, b: INT>, t MULTISET<INT>, k") ==
+      Seq("s STRUCT<a: INT, b: INT>", "t MULTISET<INT>", "k"))
+    val s = "f(a, ')', (b)) + 1"
+    assert(SqlText.closeParen(SqlText.blank(s), 2) == 13)
+    assert(SqlText.closeParen(SqlText.blank("f(a, (b)"), 2) == -1)
+  }
 }
